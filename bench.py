@@ -63,8 +63,9 @@ def _engine_queries(spark, sf_dir):
 
     def eng_rollup_stream():
         # sequential sorted-run path (rollup_stream): rides the O1 sort,
-        # zero wide shuffle — the scaling job's default cascade since
-        # round 5 (bit-identical states; BENCH/profile_stream.py A/B)
+        # zero wide shuffle — the benchmarked alternative to the default
+        # hash cascade (bit-identical states; slower cold-cache, see
+        # BENCH/profile_stream.py and README's round-5 notes)
         from ecmwf_models_spark.operators.rollup_stream import stream_rollup
 
         return finalize(stream_rollup(_silver(), "monthly"))

@@ -13,11 +13,17 @@ and a writer protocol that makes retention-tier materialization resumable
 MID-TIER: every cell directory is written atomically (task temp + rename is
 Spark's own commit protocol at partition-dir grain via dynamic partition
 overwrite), then the cell's lineage row is appended. On rerun, committed
-cells are skipped via an anti-join on the lineage table — exactly-once at
-cell grain without a transactional table format (SURVEY 7 plan B).
+cells are filtered out of the input by the committed cell ids read from
+the lineage table — exactly-once at cell grain without a transactional
+table format (SURVEY 7 plan B). The per-cell stats of a lineage row are
+taken from the files just written, so they describe what is on disk.
 
-Checksums are order-insensitive (sum of xxhash64 over rows) so they are
-stable under any task placement/parallelism.
+Checksums are order-insensitive (bit_xor of xxhash64 over rows) so they
+are stable under any task placement/parallelism. Known limit: XOR
+cancels in pairs, so a row hash that repeats an even number of times in
+a cell drops out of its checksum — a cell whose rows change only by
+pairs of identical rows ((A, A) replaced by (B, B)) keeps both its
+row_count and its checksum.
 """
 
 from __future__ import annotations
@@ -71,17 +77,41 @@ def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
         raise
 
 
+def _rows_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A few driver-side rows as a frame. Built from a pandas frame so the
+    session's Arrow path plans it as a LocalTableScan; a list of tuples
+    plans as a pickled Python RDD (Scan ExistingRDD), ~1 s per tiny
+    append instead of ~0.2 s."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
+def _append_rows(spark: SparkSession, path: str, rows: list[tuple], schema) -> None:
+    """Append driver-side rows to a parquet table as one file. Goes through
+    Spark's writer (not pyarrow) so remote paths work like every other
+    table here. No rows, no append."""
+    if not rows:
+        return
+    _rows_frame(spark, rows, schema).coalesce(1).write.mode("append").parquet(
+        path
+    )
+
+
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     return _read_or_empty(spark, path, LINEAGE_SCHEMA)
 
 
-def committed_cells(spark: SparkSession, path: str, tier: str) -> DataFrame:
-    return (
-        read_lineage(spark, path)
-        .where((F.col("tier") == tier) & (F.col("status") == "committed"))
-        .select("cell_id")
-        .distinct()
+def _committed(spark: SparkSession, path: str, tier: str) -> DataFrame:
+    return read_lineage(spark, path).where(
+        (F.col("tier") == tier) & (F.col("status") == "committed")
     )
+
+
+def committed_cells(spark: SparkSession, path: str, tier: str) -> list[int]:
+    """Sorted ids of the tier's committed cells (at most n_cells)."""
+    rows = _committed(spark, path, tier).select("cell_id").distinct().collect()
+    return sorted(r[0] for r in rows)
 
 
 def cell_stats(df: DataFrame) -> DataFrame:
@@ -118,9 +148,7 @@ def write_run_settings(
     job_id = job_id or uuid.uuid4().hex[:12]
     now = time.time()
     rows = [(k, str(v), job_id, now) for k, v in settings.items() if v is not None]
-    spark.createDataFrame(rows, SETTINGS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    _append_rows(spark, path, rows, SETTINGS_SCHEMA)
 
 
 def read_run_settings(spark: SparkSession, path: str) -> dict:
@@ -158,11 +186,7 @@ def write_table_attrs(
         for var, kv in attrs.items()
         for k, v in kv.items()
     ]
-    if not rows:
-        return
-    spark.createDataFrame(rows, ATTRS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    _append_rows(spark, path, rows, ATTRS_SCHEMA)
 
 
 def read_table_attrs(spark: SparkSession, path: str) -> dict[str, dict[str, str]]:
@@ -203,36 +227,43 @@ class ResumableTierWriter:
         self.snapshot_id = snapshot_id
         self.job_id = job_id or uuid.uuid4().hex[:12]
 
-    def pending(self, df: DataFrame) -> DataFrame:
-        done = committed_cells(self.spark, self.lineage_dir, self.tier)
-        return df.join(F.broadcast(done), "cell_id", "left_anti")
+    def _written(self, df: DataFrame) -> DataFrame:
+        """The tier as stored, in df's column order (what cell_stats hashes)."""
+        return _read_or_empty(self.spark, self.out_dir, df.schema).select(
+            *df.columns
+        )
 
     def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
-        """Materialize uncommitted cells; returns number of cells written.
+        """Materialize uncommitted cells; returns number of cells committed.
 
-        fail_after_cells simulates a mid-tier crash for the resume test: it
-        restricts this run to the first k pending cells (written AND
-        committed), then raises — the next run() must complete the rest and
-        produce a byte-identical tier.
+        `df` is evaluated once: the uncommitted cells are written in one
+        pass, and their lineage stats are read back from the written
+        files, so a lineage row describes what is on disk even when the
+        upstream is nondeterministic.
+
+        fail_after_cells simulates a crash between the write and the
+        lineage commit for the resume test: every pending cell is written,
+        lineage is committed for only the first k (by cell_id), then it
+        raises — the next run() rewrites the rest and must produce a
+        byte-identical tier.
         """
-        pend = self.pending(df)
-        cells = [r[0] for r in pend.select("cell_id").distinct().collect()]
-        cells.sort()
-        if not cells:
-            return 0
-        crash = fail_after_cells is not None and fail_after_cells < len(cells)
-        todo = cells[:fail_after_cells] if crash else cells
-
-        batch = pend.where(F.col("cell_id").isin(todo))
+        done = committed_cells(self.spark, self.lineage_dir, self.tier)
+        pending = ~F.col("cell_id").isin(done)
         # dynamic partition overwrite: each cell dir replaced atomically,
         # untouched cells preserved — write-temp-then-rename at cell grain.
         (
-            batch.write.mode("overwrite")
+            df.where(pending)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("cell_id")
             .parquet(self.out_dir)
         )
-        stats = cell_stats(batch).collect()
+        stats = cell_stats(self._written(df).where(pending)).collect()
+        if not stats:
+            return 0
+        stats.sort(key=lambda r: r["cell_id"])
+        crash = fail_after_cells is not None and fail_after_cells < len(stats)
+        todo = stats[:fail_after_cells] if crash else stats
         now = time.time()
         rows = [
             (
@@ -245,11 +276,9 @@ class ResumableTierWriter:
                 "committed",
                 now,
             )
-            for r in stats
+            for r in todo
         ]
-        self.spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.lineage_dir)
+        _append_rows(self.spark, self.lineage_dir, rows, LINEAGE_SCHEMA)
         # propagate per-variable attrs into the tier (latest-wins append;
         # a resumed run re-appending identical rows is harmless)
         from .functions.lut import attrs_for
@@ -259,25 +288,29 @@ class ResumableTierWriter:
         )
         if crash:
             raise RuntimeError(
-                f"simulated crash after {len(todo)} of {len(cells)} cells"
+                f"simulated crash after {len(todo)} of {len(stats)} cells"
             )
         return len(todo)
 
     def verify(self, df: DataFrame) -> bool:
-        """Recompute per-cell stats from the written tier and compare to the
-        lineage table (write-audit)."""
-        written = self.spark.read.parquet(self.out_dir)
-        # align column order with what run() hashed
-        written = written.select(*df.columns)
-        actual = cell_stats(written)
-        expected = read_lineage(self.spark, self.lineage_dir).where(
-            (F.col("tier") == self.tier) & (F.col("status") == "committed")
+        """Audit the stored tier against its lineage (write-audit):
+        per-cell stats recomputed from the files, full-outer-joined with
+        the committed lineage rows. A committed cell missing on disk, a
+        cell on disk without a committed row, or a row_count/checksum
+        mismatch returns False."""
+        actual = cell_stats(self._written(df)).select(
+            "cell_id",
+            F.col("row_count").alias("disk_rows"),
+            F.col("checksum").alias("disk_checksum"),
+        )
+        expected = _committed(self.spark, self.lineage_dir, self.tier).select(
+            "cell_id", "row_count", "checksum"
         )
         bad = (
-            actual.join(expected, "cell_id")
+            actual.join(expected, "cell_id", "full_outer")
             .where(
-                (actual["row_count"] != expected["row_count"])
-                | (actual["checksum"] != expected["checksum"])
+                ~F.col("disk_rows").eqNullSafe(F.col("row_count"))
+                | ~F.col("disk_checksum").eqNullSafe(F.col("checksum"))
             )
             .count()
         )

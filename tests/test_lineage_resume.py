@@ -2,6 +2,9 @@
 the graft's generalization of overview.yml-driven idempotent extension
 (reference era5/reshuffle.py:251,254-308)."""
 
+import shutil
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,6 +81,34 @@ def test_lineage_rows_complete(tmp_path, spark, daily_with_cells):
     assert lrows.where(F.col("row_count") <= 0).count() == 0
     total = lrows.agg(F.sum("row_count")).first()[0]
     assert total == daily_with_cells.count()
+
+
+@pytest.mark.parametrize("fault", ["deleted_cell", "extra_cell"])
+def test_verify_audits_cells_on_disk(tmp_path, spark, daily_with_cells, fault):
+    """A committed cell whose directory is gone, or a cell directory with
+    no committed lineage row, fails the audit."""
+    out = tmp_path / "o3"
+    w = ResumableTierWriter(spark, str(out), str(tmp_path / "l3"), tier="daily")
+    w.run(daily_with_cells)
+    assert w.verify(daily_with_cells)
+    if fault == "deleted_cell":
+        shutil.rmtree(out / "cell_id=3")
+    else:
+        shutil.copytree(out / "cell_id=3", out / "cell_id=99")
+    assert not w.verify(daily_with_cells)
+
+
+def test_run_evaluates_input_once(tmp_path, spark, daily_with_cells):
+    """Lineage stats describe the files written: with a nondeterministic
+    column a second evaluation of the input would hash other values."""
+    tag = F.udf(lambda: uuid.uuid4().hex, "string").asNondeterministic()
+    df = daily_with_cells.withColumn("tag", tag())
+    out, lin = str(tmp_path / "o5"), str(tmp_path / "l5")
+    w = ResumableTierWriter(spark, out, lin, tier="daily")
+    assert w.run(df) == 16
+    assert w.verify(df)
+    total = read_lineage(spark, lin).agg(F.sum("row_count")).first()[0]
+    assert total == spark.read.parquet(out).count()
 
 
 def test_attrs_propagate_reshuffle_rollup_read(tmp_path, spark, bronze):

@@ -169,3 +169,41 @@ def test_rollup_tiers_single_exchange(bronze):
     assert plan.count("HashAggregate") == 6, plan  # partial+final x 3
     assert "ObjectHashAggregate" not in plan, plan
     assert "SortAggregate" not in plan, plan
+
+
+def test_driver_side_appends_plan_as_local_scan(spark, tmp_path, monkeypatch):
+    """The lineage, _settings and _meta appends build their few rows on the
+    driver. Through pandas + Arrow they plan as a LocalTableScan; a list
+    of tuples (or a silent Arrow fallback) plans as a pickled Python RDD,
+    Scan ExistingRDD, ~1 s per tiny append."""
+    from ecmwf_models_spark import lineage
+
+    frames = {}
+    real = lineage._rows_frame
+
+    def spy(spark, rows, schema):
+        df = real(spark, rows, schema)
+        frames[schema] = df
+        return df
+
+    monkeypatch.setattr(lineage, "_rows_frame", spy)
+    lineage.write_run_settings(
+        spark, str(tmp_path / "_settings"), {"n_cells": 4, "salt": None}
+    )
+    tier = spark.range(40).select(
+        (F.col("id") % 4).cast("int").alias("cell_id"),
+        F.col("id").alias("text_len_sum"),
+    )
+    w = lineage.ResumableTierWriter(
+        spark, str(tmp_path / "tier"), str(tmp_path / "lin"), tier="daily"
+    )
+    assert w.run(tier) == 4
+    assert set(frames) == {
+        lineage.SETTINGS_SCHEMA,
+        lineage.LINEAGE_SCHEMA,
+        lineage.ATTRS_SCHEMA,
+    }
+    for df in frames.values():
+        plan = plan_of(df, "simple")
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
