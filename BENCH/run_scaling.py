@@ -642,6 +642,7 @@ def main():
     )
     best3 = sorted(pairs, key=lambda p: -p["speedup"])[:3]
     best3_raw = ", ".join(str(p["eff_raw"]) for p in best3)
+    best3_n = ("One", "Two", "Three")[len(best3) - 1] if best3 else "No"
     # The correlation claim below must be computed from the data, not
     # asserted: look at the windows where the box actually granted most
     # of the core ratio (probe hw_speedup >= 75% of ratio) and report
@@ -751,7 +752,7 @@ probe's median says what the box could do in those same minutes), which
 is why the normalized number is the one that predicts multi-executor
 behavior on real silicon. Consistent with that:
 {contention_claim}
-(Three least-contended windows by engine speedup, raw eff: {best3_raw}.)
+({best3_n} least-contended windows by engine speedup, raw eff: {best3_raw}.)
 
 ## Best-of throughput per level
 

@@ -11,6 +11,8 @@ partition the same way gpi2cell does (reference tests/test_grid.py:44,53).
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 DEFAULT_N_CELLS = 64
@@ -23,6 +25,71 @@ def cell_of(conv_id: Column | str, n_cells: int = DEFAULT_N_CELLS) -> Column:
     computable at read time for partition pruning (gpi2cell analogue)."""
     c = F.col(conv_id) if isinstance(conv_id, str) else conv_id
     return F.pmod(F.xxhash64(c), F.lit(n_cells)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_SEED = 42  # Spark's xxhash64 seed
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes) -> int:
+    """XXH64 of `data` as a signed 64-bit int — Spark's xxhash64 (its fixed
+    seed 42; a string column hashes its UTF-8 bytes), bit for bit, so the
+    driver can route a key without running a Spark job. Lanes are read
+    little-endian."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (_SEED + _P1 + _P2) & _M64
+        v2 = (_SEED + _P2) & _M64
+        v3 = _SEED
+        v4 = (_SEED - _P1) & _M64
+        while i + 32 <= n:
+            a, b, c, d = struct.unpack_from("<4Q", data, i)
+            v1, v2, v3, v4 = _round(v1, a), _round(v2, b), _round(v3, c), _round(v4, d)
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _round(0, v)) * _P1 + _P4) & _M64
+    else:
+        h = (_SEED + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = _rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1 & _M64
+        i += 1
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def cell_of_id(conv_id: str, n_cells: int = DEFAULT_N_CELLS) -> int:
+    """cell_of for one conv_id, evaluated on the driver with no Spark job:
+    pmod(xxhash64(conv_id), n_cells). Python's % of a signed value by a
+    positive modulus is already non-negative, which is what pmod means."""
+    return xxhash64(conv_id.encode("utf-8")) % n_cells
 
 
 def with_cell_id(df: DataFrame, n_cells: int = DEFAULT_N_CELLS) -> DataFrame:

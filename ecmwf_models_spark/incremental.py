@@ -12,13 +12,19 @@ Semantics preserved here:
     daily extend touches a handful of bucket partitions, never the full
     table: we compute the affected (cell_id) set from the new batch and
     dynamically overwrite just those partitions.
+
+The affected set is the distinct grid.cell_of(conv_id) of the RAW batch —
+one small hash aggregate, no reshuffle of the batch. That equals the
+cells of the deduplicated batch because the cell is a function of
+conv_id alone and dedup keeps one row of every (conv_id, turn_idx) key,
+so it never moves a conv to another cell or removes one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .grid import DEFAULT_N_CELLS
+from .grid import DEFAULT_N_CELLS, with_cell_id
 from .operators.dedup import latest_final_wins
 from .operators.reshuffle import reshuffle
 
@@ -53,10 +59,7 @@ def extend_silver(
     if n_cells is None:
         stored = read_run_settings(spark, f"{silver_path}/_settings")
         n_cells = int(stored.get("n_cells", DEFAULT_N_CELLS))
-    new_silverish = reshuffle(new_bronze, n_cells=n_cells)
-    affected = [
-        r[0] for r in new_silverish.select("cell_id").distinct().collect()
-    ]
+    affected = [r[0] for r in affected_cells(new_bronze, n_cells).collect()]
     if not affected:
         return []
 
@@ -83,6 +86,11 @@ def extend_silver(
         .parquet(silver_path)
     )
     return affected
+
+
+def affected_cells(new_bronze: DataFrame, n_cells: int) -> DataFrame:
+    """Distinct cell_id a batch touches — the extend's rewrite scope."""
+    return with_cell_id(new_bronze, n_cells).select("cell_id").distinct()
 
 
 def affected_buckets(new_bronze: DataFrame, tier_trunc: str) -> DataFrame:

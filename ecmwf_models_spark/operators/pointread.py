@@ -5,11 +5,21 @@ Reference: ERATs.read(lon, lat) -> nearest gpi -> gpi2cell -> open one
 (reference interface.py:675-720, README.rst:66-81, docs/ts_read.rst:15-34).
 read_bulk caches the whole cell file (interface.py:705-711).
 
-Spark-first: cell_id is recomputable from conv_id, so the filter
-(cell_id == c AND conv_id == k) prunes to ONE partition directory of the
-cell-partitioned silver table before any IO — partition pruning plays
-gpi2cell. `offsets`/`scale_factors` (interface.py:694-714) map to an affine
-select. O(cell), never O(world).
+Spark-first, one job per read: the pruned scan
+(cell_id == c AND conv_id == k), which reads ONE partition directory of
+the cell-partitioned silver table — partition pruning plays gpi2cell.
+O(cell), never O(world). `offsets`/`scale_factors` (interface.py:694-714)
+map to an affine select inside that scan.
+
+Everything else runs on the driver, as the reference's gpi2cell does:
+  * routing: cell_id is recomputed from conv_id by a pure-Python XXH64
+    bit-identical to the write path's pmod(xxhash64(conv_id), n) — no
+    Spark job, no py4j call, so it also works without a JVM gateway
+    (Spark Connect);
+  * ordering: one conversation's rows (tens to thousands) all land on the
+    driver anyway, so a stable pandas sort on (ts, turn_idx), NULLs first
+    like Spark's ASC, replaces a global orderBy that would add a
+    range-sampling job and an exchange to every read.
 """
 
 from __future__ import annotations
@@ -17,17 +27,18 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..grid import DEFAULT_N_CELLS
+from ..grid import DEFAULT_N_CELLS, cell_of_id
+
+# the read's row order: Spark's orderBy("ts", "turn_idx") (ASC NULLS FIRST)
+ORDER = ["ts", "turn_idx"]
 
 
 def cell_id_for(spark: SparkSession, conv_id: str, n_cells: int) -> int:
-    """Driver-side cell routing (gpi2cell). One-row JVM eval so the hash is
-    bit-identical to the write path's xxhash64."""
-    return (
-        spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(n_cells)).cast("int"))
-        .first()[0]
-    )
+    """Driver-side cell routing (gpi2cell): the cell directory the write
+    path (grid.cell_of) put `conv_id` in. Pure Python, bit-identical to
+    Spark's xxhash64, so routing costs no Spark job; `spark` is unused and
+    kept for callers."""
+    return cell_of_id(conv_id, n_cells)
 
 
 class TsReader:
@@ -69,19 +80,22 @@ class TsReader:
 
     def read(self, conv_id: str) -> pd.DataFrame:
         cell = cell_id_for(self.spark, conv_id, self.n_cells)
-        df = (
-            self._cell_df(cell)
-            .where(F.col("conv_id") == conv_id)
-            .orderBy("ts", "turn_idx")
-        )
+        df = self._cell_df(cell).where(F.col("conv_id") == conv_id)
         cols = self.parameters
+        extra = []
         if cols:
-            df = df.select("ts", *cols)
+            # turn_idx breaks ts ties; fetched for the sort, then dropped
+            extra = [] if "turn_idx" in cols else ["turn_idx"]
+            df = df.select("ts", *cols, *extra)
         for c, sf in self.scale_factors.items():
             df = df.withColumn(c, F.col(c) * F.lit(sf))
         for c, off in self.offsets.items():
             df = df.withColumn(c, F.col(c) + F.lit(off))
-        pdf = df.toPandas()
+        pdf = (
+            df.toPandas()
+            .sort_values(ORDER, kind="stable", na_position="first", ignore_index=True)
+            .drop(columns=extra)
+        )
         pdf = pdf.set_index("ts") if "ts" in pdf.columns else pdf
         # pandas-native attrs carry: units/long_name per variable
         pdf.attrs["var_attrs"] = {

@@ -15,6 +15,8 @@ import io
 
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark.incremental import affected_cells
+from ecmwf_models_spark.operators.pointread import TsReader
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.operators.rollup import (
     rollup_cascade,
@@ -65,6 +67,38 @@ def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):
         "PartitionFilters:"
     )[1].split("]")[0], plan
     assert "conv_id" in plan.split("PushedFilters:")[1].split("]")[0], plan
+
+
+def test_point_read_is_one_job(bronze, tmp_path):
+    """A point read is ONE Spark job, the pruned scan: routing and the
+    (ts, turn_idx) ordering run on the driver, so no job evaluates the
+    cell hash and no global sort samples ranges for a one-conv result."""
+    path = str(tmp_path / "silver_jobs")
+    write_silver(reshuffle(bronze, n_cells=8), path)
+    spark = bronze.sparkSession
+    sc = spark.sparkContext
+    for k, kw in enumerate(({}, {"read_bulk": True}, {"parameters": ["text_len"]})):
+        r = TsReader(spark, path, n_cells=8, **kw)
+        for i, conv in enumerate(("conv-000000", "conv-000001", "conv-000001")):
+            group = f"point-read-{k}-{i}"
+            sc.setJobGroup(group, "point read")
+            try:
+                assert len(r.read(conv)) > 0
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) == 1, (kw, conv, jobs)
+        r.close()
+
+
+def test_append_cells_probe_has_no_range_exchange(bronze):
+    """extend_silver finds its cells from the raw batch's cell_of: a hash
+    aggregate, not a reshuffle's range exchange and sorts."""
+    assert "rangepartitioning" in plan_of(reshuffle(bronze), "simple").lower()
+    plan = plan_of(affected_cells(bronze, 8), "simple")
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert "Sort " not in plan, plan
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):
