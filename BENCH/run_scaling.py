@@ -284,7 +284,7 @@ The same paired-probe protocol at local[8] vs local[32]
 ({s['pairs'][0]['lo']['n_turns']:,} turns; recorded in
 `scaling_8to32.json`). Round 3 shipped a REGRESSION here — 32 cores
 slower than 8 (40.1s vs 37.7s best-of) with the regression isolated to
-reshuffle+silver-write. Root cause (BENCH/profile_mem.py): shuffle
+reshuffle+silver-write. Root cause (BENCH/profile_mem.md): shuffle
 partitions fixed at 2x cores gave each 32-core task 1/4 the per-task
 execution memory of the 8-core run while per-task data only halved —
 the sorts spilled. Fix: partitions sized by the DATA (~200k rows each,

@@ -523,7 +523,10 @@ def pack_cells_stream(
                 _encode_runs(carry, [0, len(carry)], 1)
             )
 
-    return silver.mapInPandas(_pack_stream, schema=schema)
+    # only the encoded columns cross to Python (text etc. never do)
+    return silver.select("cell_id", "conv_id", "ts", *value_cols).mapInPandas(
+        _pack_stream, schema=schema
+    )
 
 
 def unpack_cells(packed, value_cols: tuple[str, ...] = ("text_len", "tool_call")):

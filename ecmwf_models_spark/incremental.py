@@ -14,10 +14,12 @@ Semantics preserved here:
     dynamically overwrite just those partitions.
 
 The affected set is the distinct grid.cell_of(conv_id) of the RAW batch —
-one small hash aggregate, no reshuffle of the batch. That equals the
-cells of the deduplicated batch because the cell is a function of
-conv_id alone and dedup keeps one row of every (conv_id, turn_idx) key,
-so it never moves a conv to another cell or removes one.
+one small hash aggregate, no reshuffle of the batch. The raw batch is
+then unioned with the affected cells' rows and deduplicated ONCE, by the
+reshuffle: existing and new rows go through one ordering (NULL is_prelim
+counts as final, NULL ingest_ts falls back to ts), so duplicates inside a
+batch resolve as a full reshuffle resolves them. Silver keeps no
+ingest_ts, so an existing row re-enters as final with ingest_ts = ts.
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .grid import DEFAULT_N_CELLS, with_cell_id
-from .operators.dedup import latest_final_wins
 from .operators.reshuffle import reshuffle
 
 
@@ -73,7 +74,7 @@ def extend_silver(
     ).withColumns(
         {"is_prelim": F.lit(False), "ingest_ts": F.col("ts")}
     ).unionByName(
-        latest_final_wins(new_bronze).select(
+        new_bronze.select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts",
             "is_prelim", "ingest_ts",
         )

@@ -151,15 +151,30 @@ def write_run_settings(
     _append_rows(spark, path, rows, SETTINGS_SCHEMA)
 
 
+def _read_latest(
+    spark: SparkSession, path: str, schema, keys: tuple[str, ...]
+) -> dict[tuple, str]:
+    """Latest value per key of an append-only (keys..., value,
+    committed_at) sidecar; latest committed_at wins, ties go to the larger
+    value so the answer is deterministic. The sidecars hold a handful of
+    rows per write, so one plain scan + collect and a Python pass cost
+    less than a groupBy/max_by and its exchange."""
+
+    def rank(r):
+        return (r["committed_at"], r["value"])
+
+    latest = {}
+    for r in _read_or_empty(spark, path, schema).collect():
+        k = tuple(r[c] for c in keys)
+        if k not in latest or rank(r) > rank(latest[k]):
+            latest[k] = r
+    return {k: r["value"] for k, r in latest.items()}
+
+
 def read_run_settings(spark: SparkSession, path: str) -> dict:
     """Latest persisted value per key (as strings; callers cast)."""
-    df = _read_or_empty(spark, path, SETTINGS_SCHEMA)
-    rows = (
-        df.groupBy("key")
-        .agg(F.max_by("value", "committed_at").alias("value"))
-        .collect()
-    )  # bounded: a handful of kwargs
-    return {r["key"]: r["value"] for r in rows}
+    latest = _read_latest(spark, path, SETTINGS_SCHEMA, ("key",))
+    return {k: v for (k,), v in latest.items()}
 
 
 ATTRS_SCHEMA = T.StructType(
@@ -191,15 +206,11 @@ def write_table_attrs(
 
 def read_table_attrs(spark: SparkSession, path: str) -> dict[str, dict[str, str]]:
     """Latest attrs per (var, key); {} when no sidecar exists."""
-    df = _read_or_empty(spark, path, ATTRS_SCHEMA)
-    rows = (
-        df.groupBy("var", "key")
-        .agg(F.max_by("value", "committed_at").alias("value"))
-        .collect()
-    )  # bounded: a few attrs per variable
     out: dict[str, dict[str, str]] = {}
-    for r in rows:
-        out.setdefault(r["var"], {})[r["key"]] = r["value"]
+    for (var, key), v in _read_latest(
+        spark, path, ATTRS_SCHEMA, ("var", "key")
+    ).items():
+        out.setdefault(var, {})[key] = v
     return out
 
 

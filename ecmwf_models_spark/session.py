@@ -17,7 +17,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # ~200k transcript rows ≈ 30-40 MB of shuffle data per partition — small
 # enough that one task's sort runs fully in its share of off-heap
 # execution memory even at 32 concurrent tasks on one 16g region.
-# Round-4 measurement (BENCH/profile_mem.py, 22.5M turns): with
+# Round-4 measurement (BENCH/profile_mem.md, 22.5M turns): with
 # partitions fixed at 2*cores the flagship reshuffle REGRESSED 8->32
 # cores (25s -> 30s; per-task memory shrank 4x while per-task data only
 # halved); sizing partitions by DATA made 32 cores strictly faster

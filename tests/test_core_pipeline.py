@@ -6,8 +6,10 @@ small fixture, assert exact point values, sortedness, and prelim exclusion.
 """
 
 import random
+import shutil
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -237,3 +239,73 @@ def test_read_options_match_spark_ordered_query(spark, silver16, kw):
         pd.testing.assert_frame_equal(got, want)
         assert got.attrs == want.attrs
     r.close()
+
+
+def test_read_touches_only_its_cell(spark, bronze, silver16, tmp_path):
+    """With every other cell's files corrupted, reads of one cell still
+    equal the Spark query: a read opens only its own cell directory."""
+    import glob
+    import os
+
+    path = str(shutil.copytree(silver16, tmp_path / "silver"))
+    cell = cell_id_for(spark, "conv-000007", 16)
+    convs = sorted(
+        x[0] for x in bronze.select("conv_id").distinct().collect()
+    )
+    mine = [c for c in convs if cell_id_for(spark, c, 16) == cell]
+    other = next(c for c in convs if cell_id_for(spark, c, 16) != cell)
+    want = {c: _spark_ordered_read(spark, path, c, 16) for c in mine}
+    readers = [TsReader(spark, path, n_cells=16, read_bulk=b) for b in (False, True)]
+
+    corrupted = 0
+    for f in glob.glob(f"{path}/cell_id=*/*"):
+        if os.path.basename(os.path.dirname(f)) != f"cell_id={cell}":
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+            corrupted += 1
+    assert corrupted
+
+    for r in readers:
+        for c in mine:
+            got = r.read(c)
+            pd.testing.assert_frame_equal(got, want[c])
+            assert got.attrs == want[c].attrs
+        with pytest.raises(pa.ArrowInvalid):  # the corruption is real
+            r.read(other)
+        r.close()
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, dict(parameters=["text_len", "role"]), dict(read_bulk=True)],
+)
+def test_read_of_cell_without_directory(spark, silver16, tmp_path, kw):
+    """A read routed to a cell with no directory returns the Spark query's
+    empty frame: same columns, dtypes and index."""
+    path = str(shutil.copytree(silver16, tmp_path / "silver"))
+    cell = cell_id_for(spark, "conv-000007", 16)
+    shutil.rmtree(f"{path}/cell_id={cell}")
+    opts = {k: v for k, v in kw.items() if k != "read_bulk"}
+    want = _spark_ordered_read(spark, path, "conv-000007", 16, **opts)
+    assert want.empty
+    r = TsReader(spark, path, n_cells=16, **kw)
+    got = r.read("conv-000007")
+    pd.testing.assert_frame_equal(got, want)
+    assert got.attrs == want.attrs
+    r.close()
+
+
+def test_read_shows_session_time_zone(spark, silver16):
+    """Timestamps come back as naive wall time in the session time zone,
+    as Spark's toPandas shows them."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        r = TsReader(spark, silver16, n_cells=16)
+        for conv in ("conv-000007", "conv-000012"):
+            got = r.read(conv)
+            want = _spark_ordered_read(spark, silver16, conv, 16)
+            pd.testing.assert_frame_equal(got, want)
+    finally:
+        spark.conf.set(key, old)

@@ -114,3 +114,50 @@ def test_extend_uses_persisted_run_kwargs(tmp_path, spark):
     # a second settings write with a newer value wins (latest committed_at)
     write_run_settings(spark, f"{path}/_settings", {"n_cells": 16})
     assert read_run_settings(spark, f"{path}/_settings") == {"n_cells": "16"}
+
+
+def test_extend_dedups_batch_like_reshuffle(tmp_path, spark):
+    """Duplicate keys inside one batch resolve as the reshuffle resolves
+    them: NULL is_prelim counts as final and NULL ingest_ts falls back to
+    ts. A pre-dedup of the batch with NULLs-first/last window ordering
+    kept the other row of each pair."""
+    import datetime as dt
+
+    initial = gen_transcripts(spark, n_conv=10, days=2, turns_per_conv=6)
+    path = str(tmp_path / "silver_nulls")
+    write_silver(reshuffle(initial, n_cells=8, num_partitions=4), path)
+
+    t = dt.datetime(2010, 1, 5)
+    h = dt.timedelta(hours=1)
+    rows = [
+        # key A: same ts; a NULL-prelim row ingested early vs a final row
+        # with no ingest_ts (falls back to ts, the later time)
+        (100, "A-null-prelim-early", t, None, t - h),
+        (100, "A-null-ingest", t, False, None),
+        # key B: a row ingested at 09:00 vs a later final row with no
+        # ingest_ts (falls back to its ts, 12:00)
+        (101, "B-ingest-9h", t + 6 * h, False, t + 9 * h),
+        (101, "B-final-late", t + 12 * h, False, None),
+    ]
+    batch = spark.createDataFrame(
+        [
+            dict(conv_id="conv-000001", turn_idx=k, role="user", text=text,
+                 tool=None, ts=ts, is_prelim=prelim, ingest_ts=ingest)
+            for k, text, ts, prelim, ingest in rows
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, is_prelim boolean, ingest_ts timestamp",
+    )
+    extend_silver(spark, path, batch, n_cells=8)
+
+    def kept(df):
+        return {
+            r["turn_idx"]: r["text"]
+            for r in df.where("conv_id = 'conv-000001' AND turn_idx >= 100")
+            .select("turn_idx", "text")
+            .collect()
+        }
+
+    got = kept(spark.read.parquet(path))
+    assert got == {100: "A-null-ingest", 101: "B-final-late"}
+    assert got == kept(reshuffle(batch, n_cells=8, num_partitions=4))

@@ -53,9 +53,10 @@ def test_rollup_cascade_one_exchange_per_tier(bronze):
 
 
 def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):
-    """The ERATs.read analogue: cell_id filter must land in PartitionFilters
-    (directory pruning — the gpi2cell file routing) and the conv_id filter
-    in PushedFilters (row-group pruning)."""
+    """The point query as Spark plans it (the reference query TsReader's
+    frames are checked against): cell_id filter must land in
+    PartitionFilters (directory pruning — the gpi2cell file routing) and
+    the conv_id filter in PushedFilters (row-group pruning)."""
     path = str(tmp_path / "silver")
     write_silver(reshuffle(bronze, n_cells=8), path)
     spark = bronze.sparkSession
@@ -69,10 +70,11 @@ def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):
     assert "conv_id" in plan.split("PushedFilters:")[1].split("]")[0], plan
 
 
-def test_point_read_is_one_job(bronze, tmp_path):
-    """A point read is ONE Spark job, the pruned scan: routing and the
-    (ts, turn_idx) ordering run on the driver, so no job evaluates the
-    cell hash and no global sort samples ranges for a one-conv result."""
+def test_point_read_runs_no_spark_job(bronze, tmp_path):
+    """A point read runs NO Spark job: routing, the scan of the one cell
+    directory and the (ts, turn_idx) ordering all run on the driver
+    (pyarrow), as the reference opens one cell file with no compute
+    engine. Only the reader's open touches Spark (the _meta sidecar)."""
     path = str(tmp_path / "silver_jobs")
     write_silver(reshuffle(bronze, n_cells=8), path)
     spark = bronze.sparkSession
@@ -88,7 +90,7 @@ def test_point_read_is_one_job(bronze, tmp_path):
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
             jobs = sc.statusTracker().getJobIdsForGroup(group)
-            assert len(jobs) == 1, (kw, conv, jobs)
+            assert jobs == [], (kw, conv, jobs)
         r.close()
 
 
